@@ -35,7 +35,9 @@ object QualityChecks {
                        minDate: String = "1900-01-01",
                        maxDate: String = "2100-01-01"): Column =
     anyOf(dateCols.map { c =>
-      val ts = to_timestamp(col(c))
+      // try_: a malformed date string (`1850-02-29`) is a violating
+      // row, never a CAST_INVALID_INPUT failure under ANSI mode
+      val ts = try_to_timestamp(col(c))
       ts.isNull || ts < to_timestamp(lit(minDate)) || ts > to_timestamp(lit(maxDate))
     })
 

@@ -4181,14 +4181,17 @@ object DeltaLog {
     * the same `keyCols` is REPLACED (whole-row update); source rows
     * with no match INSERT — last-writer-wins keyed upsert, the
     * SCD-1 / replica-apply shape the reference's silver layer needs.
-    * Copy-on-write like [[delete]]: one match-detection job finds the
-    * target files holding source keys, only those rewrite (matched
-    * rows dropped), and the whole source lands as fresh hive-staged
-    * files — removes + both add sets commit as ONE version. The
-    * source must be unique per key (counted gate, loud error —
+    * Copy-on-write like [[delete]], as one bounded pass over the
+    * persisted source: ONE gate action ([[SourceGate]]: emptiness,
+    * key ambiguity, CHECK / NOT NULL violations), ONE match-detection
+    * job finding the target files that hold source keys, then ONE
+    * staged write of those files' survivors (matched keys dropped)
+    * together with the whole source — removes + adds commit as ONE
+    * version. The source must be unique per key (loud error —
     * ambiguous multi-matches never half-apply), and its schema must
-    * match the table's. Returns the committed version (current when
-    * the source is empty). */
+    * match the table's. The persisted source is released on every
+    * exit. Returns the committed version (current when the source is
+    * empty). */
   def merge(spark: SparkSession, deltaPath: String, source: DataFrame,
             keyCols: Seq[String],
             checkpointInterval: Int = DefaultCheckpointInterval): Long = {
@@ -4216,160 +4219,121 @@ object DeltaLog {
         s"table schema ${snap.schema.simpleString}")
     val src = graft.Caches.tracked(
       source.select(snap.schema.fieldNames.map(col): _*))
-    // ambiguity gate: one source row per key, or the merge is
-    // order-dependent — refuse rather than half-apply. ONE action
-    // serves emptiness + the gate (SourceGate).
-    val (nSrc, maxKeyMult) = SourceGate(src, keyCols)
-    if (nSrc == 0L) return snap.version
-    require(maxKeyMult <= 1L,
-      "merge source has duplicate keys — aggregate it first")
-    // CHECK constraints + NOT NULL bind every writer: the source rows
-    // ARE the commit's new rows (replacements + inserts) — a
-    // violating merge vetoes whole before anything stages
-    enforceInvariants(spark, src, snap, deltaPath, enforceNotNull = true)
-    val srcKeys = src.select(keyCols.map(col): _*)
+    try {
+      // refusal order: empty → no-op; duplicate keys (the merge would
+      // be order-dependent — refuse rather than half-apply); then
+      // CHECK + NOT NULL, which bind every writer: the source rows ARE
+      // the commit's new rows (replacements + inserts), so a violating
+      // merge vetoes whole before anything stages
+      val checks = invariantChecks(src, snap, enforceNotNull = true)
+      val (nSrc, maxKeyMult, nViolating) = SourceGate(src, keyCols,
+        checks.map(_._2).reduceOption(_ || _).getOrElse(lit(false)))
+      if (nSrc == 0L) return snap.version
+      require(maxKeyMult <= 1L,
+        "merge source has duplicate keys — aggregate it first")
+      if (nViolating > 0L) refuseViolations(src, checks, deltaPath)
+      val srcKeys = src.select(keyCols.map(col): _*)
 
-    val dataSchema = StructType(snap.schema.filterNot(
-      f => snap.partitionColumns.contains(f.name)))
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    def fileKey(p: String) = deScheme(
-      org.apache.spark.paths.SparkPath.fromPathString(p).urlEncoded)
-    val pc = snap.partitionColumns
-
-    // ONE match-detection job: which target files hold a source key
-    val matched: Set[String] =
-      if (snap.files.isEmpty) Set.empty
-      else {
-        // existing DVs applied: a merge-on-read-deleted row is not
-        // a live key and must not trigger a file rewrite
-        val base = scanLive(spark, deltaPath, dataSchema, snap.files)
-        val withPv =
-          if (pc.isEmpty) base
-          else {
-            val pvDf = broadcast(snap.files.map(f =>
-              (fileKey(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-              .toDF("__path", "__pv"))
-            base.join(pvDf, Seq("__path"), "left")
-              .select(col("__path") +: snap.schema.map(f =>
-                if (pc.contains(f.name))
-                  element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                    .cast(f.dataType).as(f.name)
-                else col(f.name)): _*)
-          }
-        withPv.join(srcKeys, keyCols, "left_semi")
-          .select("__path").distinct().as[String].collect().toSet
-      }
-    val toRewrite = snap.files.filter(f => matched(fileKey(f.path)))
-
-    val v = snap.version + 1
-    val now = System.currentTimeMillis()
-    val root = deScheme(fs.makeQualified(dst).toString)
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
-    // rewrite matched files with the matched keys dropped
-    toRewrite.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      .zipWithIndex.foreach { case ((pv, fls), gi) =>
-        val grp = scanLive(spark, deltaPath, dataSchema, fls).drop("__path")
-        val full = grp.select(snap.schema.map(f =>
-          if (pc.contains(f.name))
-            lit(pv.getOrElse(f.name, null)).cast(f.dataType).as(f.name)
-          else col(f.name)): _*)
-        val survivors = full.join(srcKeys, keyCols, "left_anti")
-          .select(dataSchema.fieldNames.map(col): _*)
-        val uniq = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dst, s".tmp-mrg-$v-$gi-${java.util.UUID.randomUUID()}")
-        survivors.write.parquet(tmp.toString)
-        val dirs = pc.map(c =>
-          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-        val parts = fs.listStatus(tmp).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        parts.zipWithIndex.foreach { case (st, i) =>
-          val stats = footerStats(fsConf, st.getPath)
-          if (!stats.exists(_.contains("\"numRecords\":0"))) {
-            val rel = (dirs :+ s"part-mrg-$v-$uniq-$gi-$i.parquet").mkString("/")
-            val fin = new Path(dst, rel)
-            fs.mkdirs(fin.getParent)
-            if (!fs.rename(st.getPath, fin))
-              throw new IllegalStateException(s"rename failed for $rel")
-            adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
-          }
+      val pc = snap.partitionColumns
+      val dataSchema = StructType(snap.schema.filterNot(
+        f => pc.contains(f.name)))
+      val dst = new Path(deltaPath)
+      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // live rows of `files` (existing DVs applied: a merge-on-read-
+      // deleted row is not a live key — it neither matches nor
+      // survives) in the table schema plus `__path`, partition values
+      // restored from the add actions
+      def liveRows(files: Seq[AddFile]): DataFrame = {
+        val base = scanLive(spark, deltaPath, dataSchema, files)
+        if (pc.isEmpty) base
+        else {
+          val pvDf = broadcast(files.map(f =>
+            (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
+            .toDF("__path", "__pv"))
+          base.join(pvDf, Seq("__path"), "left")
+            .select(col("__path") +: snap.schema.map(f =>
+              if (pc.contains(f.name))
+                element_at(col("__pv"), pc.indexOf(f.name) + 1)
+                  .cast(f.dataType).as(f.name)
+              else col(f.name)): _*)
         }
-        fs.delete(tmp, true)
-      }
-    // the whole source (updates + inserts) lands as fresh files in
-    // the table's layout
-    adds ++= stageData(spark, src, dst, pc, s"mrg-$v")
-
-    // CDF legs: matched target rows (update_preimage), the matching
-    // source rows replacing them (update_postimage), unmatched source
-    // rows (insert) — `_change_data` files in the SAME commit
-    val cdcLinesOut: Seq[String] =
-      if (!cdfEnabled(snap)) Seq.empty
-      else {
-        // the matched-target frame is cached: three legs (preimage,
-        // the postimage/insert key split) derive from it — never
-        // re-scan the rewritten files per leg
-        val pre: Option[DataFrame] =
-          if (toRewrite.isEmpty) None
-          else {
-            val grp = scanLive(spark, deltaPath, dataSchema, toRewrite)
-            val full =
-              if (pc.isEmpty) grp.drop("__path")
-              else {
-                val pvDf = broadcast(toRewrite.map(f =>
-                  (fileKey(f.path),
-                    pc.map(c => f.partitionValues.getOrElse(c, null))))
-                  .toDF("__path", "__pv"))
-                grp.join(pvDf, Seq("__path"), "left")
-                  .select(snap.schema.map(f =>
-                    if (pc.contains(f.name))
-                      element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                        .cast(f.dataType).as(f.name)
-                    else col(f.name)): _*)
-              }
-            Some(graft.Caches.tracked(
-              full.join(srcKeys, keyCols, "left_semi")))
-          }
-        def matchedKeys = pre.get.select(keyCols.map(col): _*).distinct()
-        val legs = Seq(
-          pre.map(_.withColumn("_change_type", lit("update_preimage"))),
-          pre.map(_ => src.join(matchedKeys, keyCols, "left_semi")
-            .withColumn("_change_type", lit("update_postimage"))),
-          Some(pre.map(_ => src.join(matchedKeys, keyCols, "left_anti"))
-            .getOrElse(src).withColumn("_change_type", lit("insert")))).flatten
-        val lines = stageCdcLines(spark, deltaPath, snap,
-          legs.reduce(_.unionByName(_)), v)
-        pre.foreach(_.unpersist())
-        lines
       }
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    toRewrite.foreach { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
-    adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
-    lines ++= cdcLinesOut
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
-      snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
+      // ONE match-detection job: which target files hold a source key.
+      // Paths dedupe per partition instead of through a distinct
+      // shuffle — the collect is bounded by the scan's file splits
+      val matched: Set[String] =
+        if (snap.files.isEmpty) Set.empty
+        else liveRows(snap.files).join(srcKeys, keyCols, "left_semi")
+          .select("__path").as[String]
+          .mapPartitions(_.toSet.iterator).collect().toSet
+      val toRewrite = snap.files.filter(f => matched(fileKeyOf(f.path)))
+      val rewritten: Option[DataFrame] =
+        if (toRewrite.isEmpty) None
+        else Some(liveRows(toRewrite)
+          .select(snap.schema.fieldNames.map(col): _*))
+
+      // ONE staged write in the table's layout: the matched files'
+      // survivors (matched keys dropped) and the whole source (updates
+      // + inserts). A task that wrote no rows leaves an empty part —
+      // never adopted
+      val v = snap.version + 1
+      val (emptyParts, adds) = stageData(spark,
+        rewritten.map(_.join(srcKeys, keyCols, "left_anti").unionByName(src))
+          .getOrElse(src), dst, pc, s"mrg-$v")
+        .partition(_._4.exists(_.contains("\"numRecords\":0")))
+      emptyParts.foreach(a => fs.delete(new Path(dst, a._1), false))
+
+      // CDF legs: matched target rows (update_preimage), the matching
+      // source rows replacing them (update_postimage), unmatched source
+      // rows (insert) — `_change_data` files in the SAME commit
+      val cdcLinesOut: Seq[String] =
+        if (!cdfEnabled(snap)) Seq.empty
+        else {
+          // the matched-target frame is cached: three legs (preimage,
+          // the postimage/insert key split) derive from it — never
+          // re-scan the rewritten files per leg
+          val pre = rewritten.map(r =>
+            graft.Caches.tracked(r.join(srcKeys, keyCols, "left_semi")))
+          try {
+            def matchedKeys = pre.get.select(keyCols.map(col): _*).distinct()
+            val legs = Seq(
+              pre.map(_.withColumn("_change_type", lit("update_preimage"))),
+              pre.map(_ => src.join(matchedKeys, keyCols, "left_semi")
+                .withColumn("_change_type", lit("update_postimage"))),
+              Some(pre.map(_ => src.join(matchedKeys, keyCols, "left_anti"))
+                .getOrElse(src).withColumn("_change_type", lit("insert")))).flatten
+            stageCdcLines(spark, deltaPath, snap,
+              legs.reduce(_.unionByName(_)), v)
+          } finally pre.foreach(_.unpersist())
+        }
+
+      def pvJson(pv: Map[String, String]): String =
+        pv.toSeq.sortBy(_._1).map { case (k, vv) =>
+          s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
+        }.mkString("{", ",", "}")
+      val now = System.currentTimeMillis()
+      val root = normPath(fs.makeQualified(dst).toString)
+      val lines = scala.collection.mutable.ArrayBuffer[String]()
+      toRewrite.foreach { f =>
+        val rel = encodePath(normPath(new Path(f.path).toString)
+          .stripPrefix(root + "/"))
+        lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+      }
+      val (rtParts, rtDomain) = rtFresh(snap, adds.map(_._4), v)
+      adds.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
+        val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
+        lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
+      }
+      lines ++= rtDomain
+      lines ++= cdcLinesOut
+      val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
+        operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
+      maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+        snap.configuration)
+      maybeUniform(spark, deltaPath, snap.configuration)
+      vc
+    } finally src.unpersist()
   }
 
   /** GENERALIZED MERGE — the flexible SQL shapes (`WHEN MATCHED [AND
@@ -4424,224 +4388,229 @@ object DeltaLog {
       snap.schema.fieldNames.foreach(c =>
         require(nm.assignments.exists(_._1 == c),
           s"WHEN NOT MATCHED THEN INSERT must cover column $c")))
-    val src = graft.Caches.tracked(source)
-    // a BY SOURCE clause acts on UNMATCHED target rows, so an empty
-    // source is not a no-op when it is present. ONE action serves
-    // emptiness + the key-ambiguity gate (SourceGate).
-    val (nSrc, maxKeyMult) = SourceGate(src, keyCols)
-    if (nSrc == 0L && bySource.isEmpty) { src.unpersist(); return snap.version }
-    require(maxKeyMult <= 1L,
-      "merge source has duplicate keys — aggregate it first")
-    val pc = snap.partitionColumns
-    val dataSchema = StructType(snap.schema.filterNot(f => pc.contains(f.name)))
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    val dst = new Path(deltaPath)
-    val fs = dst.getFileSystem(fsConf)
-    def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
-    val root = deScheme(fs.makeQualified(dst).toString)
+    // every frame this merge persists is released on every exit:
+    // no-op, refusal, success or failure
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def hold(df: DataFrame): DataFrame = {
+      val p = graft.Caches.tracked(df); held += p; p
+    }
+    try {
+      val src = hold(source)
+      // a BY SOURCE clause acts on UNMATCHED target rows, so an empty
+      // source is not a no-op when it is present. ONE action serves
+      // emptiness + the key-ambiguity gate (SourceGate).
+      val (nSrc, maxKeyMult, _) = SourceGate(src, keyCols)
+      if (nSrc == 0L && bySource.isEmpty) return snap.version
+      require(maxKeyMult <= 1L,
+        "merge source has duplicate keys — aggregate it first")
+      val pc = snap.partitionColumns
+      val dataSchema = StructType(snap.schema.filterNot(f => pc.contains(f.name)))
+      val fsConf = spark.sparkContext.hadoopConfiguration
+      val dst = new Path(deltaPath)
+      val fs = dst.getFileSystem(fsConf)
+      def deScheme(s: String) = s.replaceFirst("^[a-zA-Z0-9]+:(//)?", "")
+      val root = deScheme(fs.makeQualified(dst).toString)
 
-    // target live rows (DVs applied) with partition values, __path
-    // and the physical row index — the exact row identity the
-    // affected-row bookkeeping keys on
-    val target: DataFrame =
-      if (snap.files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(StructField("__path", StringType) +:
-            StructField("__ri", LongType) +: snap.schema.fields))
-      else {
-        val base = scanLive(spark, deltaPath, dataSchema, snap.files,
-          keepRowIndex = true)
-        if (pc.isEmpty) base
+      // target live rows (DVs applied) with partition values, __path
+      // and the physical row index — the exact row identity the
+      // affected-row bookkeeping keys on
+      val target: DataFrame =
+        if (snap.files.isEmpty)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType(StructField("__path", StringType) +:
+              StructField("__ri", LongType) +: snap.schema.fields))
         else {
-          val pvDf = broadcast(snap.files.map(f =>
-            (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
-            .toDF("__path", "__pv"))
-          base.join(pvDf, Seq("__path"), "left")
-            .select(col("__path") +: col("__ri") +: snap.schema.map(f =>
-              if (pc.contains(f.name))
-                element_at(col("__pv"), pc.indexOf(f.name) + 1)
-                  .cast(f.dataType).as(f.name)
-              else col(f.name)): _*)
-        }
-      }
-    val srcRen = src.select(src.columns.toSeq.map(c =>
-      col(c).as(SrcPrefix + c)): _*)
-    // NON-EQUI residual ON conjuncts ride the equality join — a row
-    // pair is "matched" only under the FULL ON condition
-    val joinCond = extraOn.foldLeft(
-      keyCols.map(k => col(k) === col(SrcPrefix + k)).reduce(_ && _))(_ && _)
-    // ordered clauses, first-match-wins (standard SQL MERGE)
-    val mc = Option(matched).filter(_.nonEmpty).map(MergeSpec.ofMatched)
-    val bsc = Option(bySource).filter(_.nonEmpty).map(MergeSpec.ofBySource)
-    val affected = graft.Caches.tracked(mc match {
-      case Some(c) => target.join(srcRen, joinCond, "inner").where(c.any)
-      case None => target.join(srcRen, joinCond, "inner").limit(0)
-    })
-    // BY SOURCE: target rows with NO source match under the FULL ON,
-    // clause condition applied over target columns alone
-    val srcKeysDf = src.select(keyCols.map(col): _*).distinct()
-    val bsAffected: Option[DataFrame] = bsc.map(c =>
-      graft.Caches.tracked((extraOn match {
-        case None => target.join(srcKeysDf, keyCols, "left_anti")
-        case Some(_) => target.join(srcRen, joinCond, "left_anti")
-      }).where(c.any)))
-    val tableCols = snap.schema.fieldNames.toSeq
-    val matchedFilePaths: Set[String] =
-      if (snap.files.isEmpty) Set.empty
-      else ((if (mc.isDefined)
-        affected.select("__path").distinct().as[String].collect().toSet
-      else Set.empty[String]) ++
-        bsAffected.map(_.select("__path").distinct().as[String]
-          .collect().toSet).getOrElse(Set.empty))
-    val toRewrite = snap.files.filter(f => matchedFilePaths(fileKeyOf(f.path)))
-
-    // GENERATED columns RECOMPUTE from the post-assignment row (real
-    // Delta's behavior when an update touches their inputs) — the
-    // same projection [[update]] applies
-    val genRecompute: DataFrame => DataFrame = { d =>
-      if (!snap.schema.fields.exists(_.metadata.contains(GenerationExprKey)))
-        d
-      else d.select(snap.schema.fields.map { f =>
-        if (f.metadata.contains(GenerationExprKey))
-          expr(f.metadata.getString(GenerationExprKey))
-            .cast(f.dataType).as(f.name)
-        else col(f.name)
-      }.toIndexedSeq: _*)
-    }
-    val updatedRows: Option[DataFrame] = mc.filter(_.hasUpdate).map { c =>
-      genRecompute(affected.where(!c.isDelete).select(tableCols.map(n =>
-        c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*))
-    }
-    val bsUpdatedRows: Option[DataFrame] =
-      bsc.filter(_.hasUpdate).zip(bsAffected).map { case (c, bsa) =>
-        genRecompute(bsa.where(!c.isDelete).select(tableCols.map(n =>
-          c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*))
-      }
-    val insertRows: Option[DataFrame] =
-      Option(notMatched).filter(_.nonEmpty).map { ns =>
-        val c = MergeSpec.ofNotMatched(ns)
-        // "not matched" = no target row satisfying the FULL ON
-        val unmatchedSrc = extraOn match {
-          case None => src.join(
-            target.select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_anti")
-          case Some(_) => srcRen.join(target, joinCond, "left_anti")
-            .select(src.columns.toSeq.map(cn =>
-              col(SrcPrefix + cn).as(cn)): _*)
-        }
-        unmatchedSrc
-          .where(c.any)
-          .select(tableCols.map(n =>
-            c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*)
-      }
-    val appendFrame: Option[DataFrame] =
-      (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ insertRows.toSeq)
-        .reduceOption(_.unionByName(_))
-    // the new rows are this commit's writes: CHECK + NOT NULL veto
-    // whole before anything stages
-    appendFrame.foreach(af =>
-      enforceInvariants(spark, af, snap, deltaPath, enforceNotNull = true))
-
-    if (toRewrite.isEmpty && appendFrame.forall(_.isEmpty)) {
-      affected.unpersist(); bsAffected.foreach(_.unpersist())
-      src.unpersist(); return snap.version
-    }
-
-    val v = snap.version + 1
-    val now = System.currentTimeMillis()
-    val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
-    // rewrite affected files dropping exactly the AFFECTED ROWS (by
-    // physical position) — condition-false matches survive in content
-    val affectedRowIds = bsAffected
-      .map(b => affected.select("__path", "__ri")
-        .unionByName(b.select("__path", "__ri")))
-      .getOrElse(affected.select("__path", "__ri"))
-    toRewrite.groupBy(_.partitionValues).toSeq
-      .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-      .zipWithIndex.foreach { case ((pv, fls), gi) =>
-        val grp = scanLive(spark, deltaPath, dataSchema, fls,
-          keepRowIndex = true)
-        val survivors = grp.join(affectedRowIds, Seq("__path", "__ri"),
-          "left_anti")
-          .select(dataSchema.fieldNames.map(col): _*)
-        val uniq = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dst, s".tmp-mrgf-$v-$gi-${java.util.UUID.randomUUID()}")
-        survivors.write.parquet(tmp.toString)
-        val dirs = pc.map(c =>
-          s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
-            .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
-        val parts = fs.listStatus(tmp).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-        parts.zipWithIndex.foreach { case (st, i) =>
-          val stats = footerStats(fsConf, st.getPath)
-          if (!stats.exists(_.contains("\"numRecords\":0"))) {
-            val rel = (dirs :+ s"part-mrgf-$v-$uniq-$gi-$i.parquet").mkString("/")
-            val fin = new Path(dst, rel)
-            fs.mkdirs(fin.getParent)
-            if (!fs.rename(st.getPath, fin))
-              throw new IllegalStateException(s"rename failed for $rel")
-            adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
+          val base = scanLive(spark, deltaPath, dataSchema, snap.files,
+            keepRowIndex = true)
+          if (pc.isEmpty) base
+          else {
+            val pvDf = broadcast(snap.files.map(f =>
+              (fileKeyOf(f.path), pc.map(c => f.partitionValues.getOrElse(c, null))))
+              .toDF("__path", "__pv"))
+            base.join(pvDf, Seq("__path"), "left")
+              .select(col("__path") +: col("__ri") +: snap.schema.map(f =>
+                if (pc.contains(f.name))
+                  element_at(col("__pv"), pc.indexOf(f.name) + 1)
+                    .cast(f.dataType).as(f.name)
+                else col(f.name)): _*)
           }
         }
-        fs.delete(tmp, true)
-      }
-    appendFrame.foreach(af => adds ++= stageData(spark, af, dst, pc, s"mrgf-$v"))
+      val srcRen = src.select(src.columns.toSeq.map(c =>
+        col(c).as(SrcPrefix + c)): _*)
+      // NON-EQUI residual ON conjuncts ride the equality join — a row
+      // pair is "matched" only under the FULL ON condition
+      val joinCond = extraOn.foldLeft(
+        keyCols.map(k => col(k) === col(SrcPrefix + k)).reduce(_ && _))(_ && _)
+      // ordered clauses, first-match-wins (standard SQL MERGE)
+      val mc = Option(matched).filter(_.nonEmpty).map(MergeSpec.ofMatched)
+      val bsc = Option(bySource).filter(_.nonEmpty).map(MergeSpec.ofBySource)
+      val affected = hold(mc match {
+        case Some(c) => target.join(srcRen, joinCond, "inner").where(c.any)
+        case None => target.join(srcRen, joinCond, "inner").limit(0)
+      })
+      // BY SOURCE: target rows with NO source match under the FULL ON,
+      // clause condition applied over target columns alone
+      val srcKeysDf = src.select(keyCols.map(col): _*).distinct()
+      val bsAffected: Option[DataFrame] = bsc.map(c =>
+        hold((extraOn match {
+          case None => target.join(srcKeysDf, keyCols, "left_anti")
+          case Some(_) => target.join(srcRen, joinCond, "left_anti")
+        }).where(c.any)))
+      val tableCols = snap.schema.fieldNames.toSeq
+      val matchedFilePaths: Set[String] =
+        if (snap.files.isEmpty) Set.empty
+        else ((if (mc.isDefined)
+          affected.select("__path").distinct().as[String].collect().toSet
+        else Set.empty[String]) ++
+          bsAffected.map(_.select("__path").distinct().as[String]
+            .collect().toSet).getOrElse(Set.empty))
+      val toRewrite = snap.files.filter(f => matchedFilePaths(fileKeyOf(f.path)))
 
-    // CDF legs: the matched clause's pre-images (delete or
-    // update_preimage), post-images, and inserts — same commit
-    val cdcLinesOut: Seq[String] =
-      if (!cdfEnabled(snap)) Seq.empty
-      else {
-        // pre-images split by the row's FIRST-TRUE clause action:
-        // delete-clause rows record `delete`, update-clause rows
-        // `update_preimage` (+ their post-image leg)
-        def pre(frame: DataFrame, c: MergeSpec.OrderedClauses): Seq[DataFrame] = {
-          val tgt = (f: DataFrame) => f.select(tableCols.map(col): _*)
-          Seq(
-            Option.when(c.hasDelete)(tgt(frame.where(c.isDelete))
-              .withColumn("_change_type", lit("delete"))),
-            Option.when(c.hasUpdate)(tgt(frame.where(!c.isDelete))
-              .withColumn("_change_type", lit("update_preimage")))
-          ).flatten
+      // GENERATED columns RECOMPUTE from the post-assignment row (real
+      // Delta's behavior when an update touches their inputs) — the
+      // same projection [[update]] applies
+      val genRecompute: DataFrame => DataFrame = { d =>
+        if (!snap.schema.fields.exists(_.metadata.contains(GenerationExprKey)))
+          d
+        else d.select(snap.schema.fields.map { f =>
+          if (f.metadata.contains(GenerationExprKey))
+            expr(f.metadata.getString(GenerationExprKey))
+              .cast(f.dataType).as(f.name)
+          else col(f.name)
+        }.toIndexedSeq: _*)
+      }
+      val updatedRows: Option[DataFrame] = mc.filter(_.hasUpdate).map { c =>
+        genRecompute(affected.where(!c.isDelete).select(tableCols.map(n =>
+          c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*))
+      }
+      val bsUpdatedRows: Option[DataFrame] =
+        bsc.filter(_.hasUpdate).zip(bsAffected).map { case (c, bsa) =>
+          genRecompute(bsa.where(!c.isDelete).select(tableCols.map(n =>
+            c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*))
         }
-        val legs =
-          mc.toSeq.flatMap(pre(affected, _)) ++
-          updatedRows.map(
-            _.withColumn("_change_type", lit("update_postimage"))) ++
-          bsc.zip(bsAffected).toSeq.flatMap { case (c, bsa) => pre(bsa, c) } ++
-          bsUpdatedRows.map(
-            _.withColumn("_change_type", lit("update_postimage"))) ++
-          insertRows.map(_.withColumn("_change_type", lit("insert")))
-        legs.reduceOption(_.unionByName(_))
-          .map(l => stageCdcLines(spark, deltaPath, snap, l, v))
-          .getOrElse(Seq.empty)
-      }
+      val insertRows: Option[DataFrame] =
+        Option(notMatched).filter(_.nonEmpty).map { ns =>
+          val c = MergeSpec.ofNotMatched(ns)
+          // "not matched" = no target row satisfying the FULL ON
+          val unmatchedSrc = extraOn match {
+            case None => src.join(
+              target.select(keyCols.map(col): _*).distinct(),
+              keyCols, "left_anti")
+            case Some(_) => srcRen.join(target, joinCond, "left_anti")
+              .select(src.columns.toSeq.map(cn =>
+                col(SrcPrefix + cn).as(cn)): _*)
+          }
+          unmatchedSrc
+            .where(c.any)
+            .select(tableCols.map(n =>
+              c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*)
+        }
+      val appendFrame: Option[DataFrame] =
+        (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ insertRows.toSeq)
+          .reduceOption(_.unionByName(_))
+      // the new rows are this commit's writes: CHECK + NOT NULL veto
+      // whole before anything stages
+      appendFrame.foreach(af =>
+        enforceInvariants(spark, af, snap, deltaPath, enforceNotNull = true))
 
-    def pvJson(pv: Map[String, String]): String =
-      pv.toSeq.sortBy(_._1).map { case (k, vv) =>
-        s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
-      }.mkString("{", ",", "}")
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    toRewrite.foreach { f =>
-      val rel = encodePath(deScheme(new Path(f.path).toString)
-        .stripPrefix(root + "/"))
-      lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
-    adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
-      val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
-      lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
-    }
-    lines ++= rtDomain
-    lines ++= cdcLinesOut
-    affected.unpersist(); bsAffected.foreach(_.unpersist()); src.unpersist()
-    val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
-      operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
-    maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
-      snap.configuration)
-    maybeUniform(spark, deltaPath, snap.configuration)
-    vc
+      if (toRewrite.isEmpty && appendFrame.forall(_.isEmpty))
+        return snap.version
+
+      val v = snap.version + 1
+      val now = System.currentTimeMillis()
+      val adds = scala.collection.mutable.ArrayBuffer[(String, Map[String, String], Long, Option[String])]()
+      // rewrite affected files dropping exactly the AFFECTED ROWS (by
+      // physical position) — condition-false matches survive in content
+      val affectedRowIds = bsAffected
+        .map(b => affected.select("__path", "__ri")
+          .unionByName(b.select("__path", "__ri")))
+        .getOrElse(affected.select("__path", "__ri"))
+      toRewrite.groupBy(_.partitionValues).toSeq
+        .sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
+        .zipWithIndex.foreach { case ((pv, fls), gi) =>
+          val grp = scanLive(spark, deltaPath, dataSchema, fls,
+            keepRowIndex = true)
+          val survivors = grp.join(affectedRowIds, Seq("__path", "__ri"),
+            "left_anti")
+            .select(dataSchema.fieldNames.map(col): _*)
+          val uniq = java.util.UUID.randomUUID().toString.take(8)
+          val tmp = new Path(dst, s".tmp-mrgf-$v-$gi-${java.util.UUID.randomUUID()}")
+          survivors.write.parquet(tmp.toString)
+          val dirs = pc.map(c =>
+            s"${hiveEscape(c)}=${Option(pv.getOrElse(c, null))
+              .map(hiveEscape).getOrElse("__HIVE_DEFAULT_PARTITION__")}")
+          val parts = fs.listStatus(tmp).toSeq
+            .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+          parts.zipWithIndex.foreach { case (st, i) =>
+            val stats = footerStats(fsConf, st.getPath)
+            if (!stats.exists(_.contains("\"numRecords\":0"))) {
+              val rel = (dirs :+ s"part-mrgf-$v-$uniq-$gi-$i.parquet").mkString("/")
+              val fin = new Path(dst, rel)
+              fs.mkdirs(fin.getParent)
+              if (!fs.rename(st.getPath, fin))
+                throw new IllegalStateException(s"rename failed for $rel")
+              adds += ((rel, pv, fs.getFileStatus(fin).getLen, stats))
+            }
+          }
+          fs.delete(tmp, true)
+        }
+      appendFrame.foreach(af => adds ++= stageData(spark, af, dst, pc, s"mrgf-$v"))
+
+      // CDF legs: the matched clause's pre-images (delete or
+      // update_preimage), post-images, and inserts — same commit
+      val cdcLinesOut: Seq[String] =
+        if (!cdfEnabled(snap)) Seq.empty
+        else {
+          // pre-images split by the row's FIRST-TRUE clause action:
+          // delete-clause rows record `delete`, update-clause rows
+          // `update_preimage` (+ their post-image leg)
+          def pre(frame: DataFrame, c: MergeSpec.OrderedClauses): Seq[DataFrame] = {
+            val tgt = (f: DataFrame) => f.select(tableCols.map(col): _*)
+            Seq(
+              Option.when(c.hasDelete)(tgt(frame.where(c.isDelete))
+                .withColumn("_change_type", lit("delete"))),
+              Option.when(c.hasUpdate)(tgt(frame.where(!c.isDelete))
+                .withColumn("_change_type", lit("update_preimage")))
+            ).flatten
+          }
+          val legs =
+            mc.toSeq.flatMap(pre(affected, _)) ++
+            updatedRows.map(
+              _.withColumn("_change_type", lit("update_postimage"))) ++
+            bsc.zip(bsAffected).toSeq.flatMap { case (c, bsa) => pre(bsa, c) } ++
+            bsUpdatedRows.map(
+              _.withColumn("_change_type", lit("update_postimage"))) ++
+            insertRows.map(_.withColumn("_change_type", lit("insert")))
+          legs.reduceOption(_.unionByName(_))
+            .map(l => stageCdcLines(spark, deltaPath, snap, l, v))
+            .getOrElse(Seq.empty)
+        }
+
+      def pvJson(pv: Map[String, String]): String =
+        pv.toSeq.sortBy(_._1).map { case (k, vv) =>
+          s"${jsEscape(k)}:${if (vv == null) "null" else jsEscape(vv)}"
+        }.mkString("{", ",", "}")
+      val lines = scala.collection.mutable.ArrayBuffer[String]()
+      toRewrite.foreach { f =>
+        val rel = encodePath(deScheme(new Path(f.path).toString)
+          .stripPrefix(root + "/"))
+        lines += s"""{"remove":{"path":${jsEscape(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+      }
+      val (rtParts, rtDomain) = rtFresh(snap, adds.toSeq.map(_._4), v)
+      adds.toSeq.zip(rtParts).foreach { case ((rel, pv, sz, st), rtPart) =>
+        val statsPart = st.map(j => s""","stats":${jsEscape(j)}""").getOrElse("")
+        lines += s"""{"add":{"path":${jsEscape(encodePath(rel))},"partitionValues":${pvJson(pv)},"size":$sz,"modificationTime":$now,"dataChange":true$statsPart$rtPart}}"""
+      }
+      lines ++= rtDomain
+      lines ++= cdcLinesOut
+      val vc = commitCas(spark, deltaPath, v, lines.toSeq, ReadTable,
+        operation = "MERGE", ictHint = Some(ictOn(snap.configuration)))
+      maybeCheckpoint(spark, deltaPath, vc, checkpointInterval,
+        snap.configuration)
+      maybeUniform(spark, deltaPath, snap.configuration)
+      vc
+    } finally held.foreach(_.unpersist())
   }
 
   /** Shared copy-on-write core: locate files with actual matches,
@@ -5693,37 +5662,48 @@ object DeltaLog {
   private def enforceInvariants(spark: SparkSession, df: DataFrame,
                                 snap: Snapshot, deltaPath: String,
                                 enforceNotNull: Boolean): Unit = {
-    val checks: Seq[(String, org.apache.spark.sql.Column)] =
-      snap.configuration.toSeq.sortBy(_._1).collect {
-        case (k, v) if k.startsWith("delta.constraints.") =>
-          s"CHECK constraint ${k.stripPrefix("delta.constraints.")} ($v)" ->
-            !coalesce(expr(v), lit(true))
+    val checks = invariantChecks(df, snap, enforceNotNull)
+    if (checks.nonEmpty && !df.where(checks.map(_._2).reduce(_ || _)).isEmpty)
+      refuseViolations(df, checks, deltaPath)
+  }
+
+  /** The (label, violation predicate) pairs [[enforceInvariants]]
+    * gates `df` on: CHECK constraints, provided generated columns,
+    * legacy column invariants and (when asked) NOT NULL columns the
+    * frame's own type cannot rule out. Empty when nothing binds. */
+  private def invariantChecks(df: DataFrame, snap: Snapshot,
+                              enforceNotNull: Boolean)
+  : Seq[(String, org.apache.spark.sql.Column)] =
+    snap.configuration.toSeq.sortBy(_._1).collect {
+      case (k, v) if k.startsWith("delta.constraints.") =>
+        s"CHECK constraint ${k.stripPrefix("delta.constraints.")} ($v)" ->
+          !coalesce(expr(v), lit(true))
+    } ++ snap.schema.fields.toSeq
+      // a PROVIDED generated column must equal its expression
+      // (null-safe); omitted ones were computed upstream
+      .filter(f => f.metadata.contains(GenerationExprKey) &&
+        df.columns.contains(f.name))
+      .map { f =>
+        val e = f.metadata.getString(GenerationExprKey)
+        s"GENERATED column ${f.name} AS ($e)" ->
+          !(col(f.name) <=> expr(e).cast(f.dataType))
       } ++ snap.schema.fields.toSeq
-        // a PROVIDED generated column must equal its expression
-        // (null-safe); omitted ones were computed upstream
-        .filter(f => f.metadata.contains(GenerationExprKey) &&
-          df.columns.contains(f.name))
-        .map { f =>
-          val e = f.metadata.getString(GenerationExprKey)
-          s"GENERATED column ${f.name} AS ($e)" ->
-            !(col(f.name) <=> expr(e).cast(f.dataType))
-        } ++ snap.schema.fields.toSeq
-        // old-style COLUMN INVARIANTS (PROTOCOL.md §Column
-        // Invariants, the legacy writer-v2 feature): metadata key
-        // `delta.invariants` holds {"expression":{"expression":"…"}}
-        // — rows where it does not hold must veto the commit
-        .filter(f => f.metadata.contains("delta.invariants") &&
-          df.columns.contains(f.name))
-        .map { f =>
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(f.metadata.getString("delta.invariants"))
-          val e = Option(node.get("expression"))
-            .flatMap(x => Option(x.get("expression"))).map(_.asText())
-            .getOrElse(throw new UnsupportedOperationException(
-              s"unparseable delta.invariants on ${f.name}: " +
-                f.metadata.getString("delta.invariants")))
-          s"INVARIANT on ${f.name} ($e)" -> !coalesce(expr(e), lit(true))
-        } ++ (if (!enforceNotNull) Seq.empty
+      // old-style COLUMN INVARIANTS (PROTOCOL.md §Column
+      // Invariants, the legacy writer-v2 feature): metadata key
+      // `delta.invariants` holds {"expression":{"expression":"…"}}
+      // — rows where it does not hold must veto the commit
+      .filter(f => f.metadata.contains("delta.invariants") &&
+        df.columns.contains(f.name))
+      .map { f =>
+        val node = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(f.metadata.getString("delta.invariants"))
+        val e = Option(node.get("expression"))
+          .flatMap(x => Option(x.get("expression"))).map(_.asText())
+          .getOrElse(throw new UnsupportedOperationException(
+            s"unparseable delta.invariants on ${f.name}: " +
+              f.metadata.getString("delta.invariants")))
+        s"INVARIANT on ${f.name} ($e)" -> !coalesce(expr(e), lit(true))
+      } ++ (if (!enforceNotNull) Seq.empty
       else snap.schema.fields.toSeq
         // only when the incoming column CAN hold nulls — a frame whose
         // own type is non-nullable is proven clean by Spark's types,
@@ -5731,15 +5711,18 @@ object DeltaLog {
         .filter(f => !f.nullable &&
           df.schema.find(_.name == f.name).exists(_.nullable))
         .map(f => s"NOT NULL column ${f.name}" -> col(f.name).isNull))
-    if (checks.isEmpty) return
-    if (!df.where(checks.map(_._2).reduce(_ || _)).isEmpty) {
-      val counts = checks.map { case (label, c) =>
-        (label, df.where(c).count())
-      }.filter(_._2 > 0)
-      throw new IllegalArgumentException(
-        s"write to $deltaPath rejected: " + counts.map { case (l, n) =>
-          s"$n rows violate $l" }.mkString("; "))
-    }
+
+  /** The violation path (rare): per-check counts for the message,
+    * then the refusal that vetoes the whole commit. */
+  private def refuseViolations(df: DataFrame,
+                               checks: Seq[(String, org.apache.spark.sql.Column)],
+                               deltaPath: String): Nothing = {
+    val counts = checks.map { case (label, c) =>
+      (label, df.where(c).count())
+    }.filter(_._2 > 0)
+    throw new IllegalArgumentException(
+      s"write to $deltaPath rejected: " + counts.map { case (l, n) =>
+        s"$n rows violate $l" }.mkString("; "))
   }
 
   /** Author a classic single-file checkpoint at `version`:

@@ -2068,24 +2068,24 @@ object IcebergTable {
         s"table schema ${snap.schema.simpleString}")
     val src = graft.Caches.tracked(
       source.select(snap.schema.fieldNames.map(col): _*))
-    // ONE action serves emptiness + the key-ambiguity gate
-    val (nSrc, maxKeyMult) = SourceGate(src, keyCols)
-    if (nSrc == 0L) { src.unpersist(); return snap.snapshotId }
-    require(maxKeyMult <= 1L,
-      "merge source has duplicate keys — aggregate it first")
-    val cur = liveRowsWithPos(spark, snap, snap.files)
-    val matched = cur.join(src.select(keyCols.map(col): _*),
-      keyCols, "left_semi")
-    val v = gatedPositions(spark, snap, snap.files, matched, "MERGE") match {
-      case Right(rows) =>
-        commitMorSnapshot(spark, tablePath, snap, rows, Some(src),
-          "overwrite")
-      case Left(pos) => // over the gate: rewrite the affected files
-        commitCow(spark, tablePath, snap, snap.files, pos, Some(src),
-          "overwrite")
-    }
-    src.unpersist()
-    v
+    try {
+      // ONE action serves emptiness + the key-ambiguity gate
+      val (nSrc, maxKeyMult, _) = SourceGate(src, keyCols)
+      if (nSrc == 0L) return snap.snapshotId
+      require(maxKeyMult <= 1L,
+        "merge source has duplicate keys — aggregate it first")
+      val cur = liveRowsWithPos(spark, snap, snap.files)
+      val matched = cur.join(src.select(keyCols.map(col): _*),
+        keyCols, "left_semi")
+      gatedPositions(spark, snap, snap.files, matched, "MERGE") match {
+        case Right(rows) =>
+          commitMorSnapshot(spark, tablePath, snap, rows, Some(src),
+            "overwrite")
+        case Left(pos) => // over the gate: rewrite the affected files
+          commitCow(spark, tablePath, snap, snap.files, pos, Some(src),
+            "overwrite")
+      }
+    } finally src.unpersist()
   }
 
   /** GENERALIZED MERGE — the flexible SQL shapes (conditional /
@@ -2144,78 +2144,78 @@ object IcebergTable {
       }
     }
     val src = graft.Caches.tracked(source)
-    // ONE action serves emptiness + the key-ambiguity gate
-    val (nSrc, maxKeyMult) = SourceGate(src, keyCols)
-    if (nSrc == 0L && bySource.isEmpty) {
-      src.unpersist(); return snap.snapshotId
-    }
-    require(maxKeyMult <= 1L,
-      "merge source has duplicate keys — aggregate it first")
-    val cur = graft.Caches.tracked(liveRowsWithPos(spark, snap, snap.files))
     try {
-      val srcRen = src.select(src.columns.toSeq.map(c =>
-        col(c).as(SrcPrefix + c)): _*)
-      // NON-EQUI residual ON conjuncts ride the equality join — a row
-      // pair is "matched" only under the FULL ON condition
-      val joinCond = extraOn.foldLeft(
-        keyCols.map(k => col(k) === col(SrcPrefix + k)).reduce(_ && _))(
-        _ && _)
-      // ordered clauses, first-match-wins (standard SQL MERGE)
-      val mc = Option(matched).filter(_.nonEmpty).map(MergeSpec.ofMatched)
-      val bsc = Option(bySource).filter(_.nonEmpty).map(MergeSpec.ofBySource)
-      val affected = mc match {
-        case Some(c) => cur.join(srcRen, joinCond, "inner").where(c.any)
-        case None => cur.join(srcRen, joinCond, "inner").limit(0)
-      }
-      val srcKeysDf = src.select(keyCols.map(col): _*).distinct()
-      val bsAffected: Option[DataFrame] = bsc.map(c =>
-        (extraOn match {
-          case None => cur.join(srcKeysDf, keyCols, "left_anti")
-          case Some(_) => cur.join(srcRen, joinCond, "left_anti")
-        }).where(c.any))
-      val posFrame = bsAffected
-        .map(b => affected.select(col("__path"), col("__ri"))
-          .unionByName(b.select(col("__path"), col("__ri"))))
-        .getOrElse(affected)
-      val gated = gatedPositions(spark, snap, snap.files, posFrame, "MERGE")
-      val tableCols = snap.schema.fieldNames.toSeq
-      val updatedRows: Option[DataFrame] = mc.filter(_.hasUpdate).map { c =>
-        affected.where(!c.isDelete).select(tableCols.map(n =>
-          c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*)
-      }
-      val bsUpdatedRows: Option[DataFrame] =
-        bsc.filter(_.hasUpdate).zip(bsAffected).map { case (c, bsa) =>
-          bsa.where(!c.isDelete).select(tableCols.map(n =>
+      // ONE action serves emptiness + the key-ambiguity gate
+      val (nSrc, maxKeyMult, _) = SourceGate(src, keyCols)
+      if (nSrc == 0L && bySource.isEmpty) return snap.snapshotId
+      require(maxKeyMult <= 1L,
+        "merge source has duplicate keys — aggregate it first")
+      val cur = graft.Caches.tracked(liveRowsWithPos(spark, snap, snap.files))
+      try {
+        val srcRen = src.select(src.columns.toSeq.map(c =>
+          col(c).as(SrcPrefix + c)): _*)
+        // NON-EQUI residual ON conjuncts ride the equality join — a row
+        // pair is "matched" only under the FULL ON condition
+        val joinCond = extraOn.foldLeft(
+          keyCols.map(k => col(k) === col(SrcPrefix + k)).reduce(_ && _))(
+          _ && _)
+        // ordered clauses, first-match-wins (standard SQL MERGE)
+        val mc = Option(matched).filter(_.nonEmpty).map(MergeSpec.ofMatched)
+        val bsc = Option(bySource).filter(_.nonEmpty).map(MergeSpec.ofBySource)
+        val affected = mc match {
+          case Some(c) => cur.join(srcRen, joinCond, "inner").where(c.any)
+          case None => cur.join(srcRen, joinCond, "inner").limit(0)
+        }
+        val srcKeysDf = src.select(keyCols.map(col): _*).distinct()
+        val bsAffected: Option[DataFrame] = bsc.map(c =>
+          (extraOn match {
+            case None => cur.join(srcKeysDf, keyCols, "left_anti")
+            case Some(_) => cur.join(srcRen, joinCond, "left_anti")
+          }).where(c.any))
+        val posFrame = bsAffected
+          .map(b => affected.select(col("__path"), col("__ri"))
+            .unionByName(b.select(col("__path"), col("__ri"))))
+          .getOrElse(affected)
+        val gated = gatedPositions(spark, snap, snap.files, posFrame, "MERGE")
+        val tableCols = snap.schema.fieldNames.toSeq
+        val updatedRows: Option[DataFrame] = mc.filter(_.hasUpdate).map { c =>
+          affected.where(!c.isDelete).select(tableCols.map(n =>
             c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*)
         }
-      val insertRows: Option[DataFrame] = nmc.map { _ =>
-        // "not matched" = no target row satisfying the FULL ON — with
-        // non-equi conjuncts a key-matched-but-condition-false source
-        // row still inserts
-        val unmatchedSrc = extraOn match {
-          case None => src.join(
-            cur.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-          case Some(_) => srcRen.join(cur, joinCond, "left_anti")
-            .select(src.columns.toSeq.map(c =>
-              col(SrcPrefix + c).as(c)): _*)
+        val bsUpdatedRows: Option[DataFrame] =
+          bsc.filter(_.hasUpdate).zip(bsAffected).map { case (c, bsa) =>
+            bsa.where(!c.isDelete).select(tableCols.map(n =>
+              c.value(n, col(n)).cast(snap.schema(n).dataType).as(n)): _*)
+          }
+        val insertRows: Option[DataFrame] = nmc.map { _ =>
+          // "not matched" = no target row satisfying the FULL ON — with
+          // non-equi conjuncts a key-matched-but-condition-false source
+          // row still inserts
+          val unmatchedSrc = extraOn match {
+            case None => src.join(
+              cur.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+            case Some(_) => srcRen.join(cur, joinCond, "left_anti")
+              .select(src.columns.toSeq.map(c =>
+                col(SrcPrefix + c).as(c)): _*)
+          }
+          insertProjection(unmatchedSrc)
         }
-        insertProjection(unmatchedSrc)
-      }
-      val appendFrame: Option[DataFrame] =
-        (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ insertRows.toSeq)
-          .reduceOption(_.unionByName(_))
-          .filterNot(_.isEmpty)
-      gated match {
-        case Right(rows) if rows.isEmpty && appendFrame.isEmpty =>
-          snap.snapshotId
-        case Right(rows) =>
-          commitMorSnapshot(spark, tablePath, snap, rows, appendFrame,
-            "overwrite")
-        case Left(pos) => // over the gate: rewrite the affected files
-          commitCow(spark, tablePath, snap, snap.files, pos, appendFrame,
-            "overwrite")
-      }
-    } finally { cur.unpersist(); src.unpersist() }
+        val appendFrame: Option[DataFrame] =
+          (updatedRows.toSeq ++ bsUpdatedRows.toSeq ++ insertRows.toSeq)
+            .reduceOption(_.unionByName(_))
+            .filterNot(_.isEmpty)
+        gated match {
+          case Right(rows) if rows.isEmpty && appendFrame.isEmpty =>
+            snap.snapshotId
+          case Right(rows) =>
+            commitMorSnapshot(spark, tablePath, snap, rows, appendFrame,
+              "overwrite")
+          case Left(pos) => // over the gate: rewrite the affected files
+            commitCow(spark, tablePath, snap, snap.files, pos, appendFrame,
+              "overwrite")
+        }
+      } finally cur.unpersist()
+    } finally src.unpersist()
   }
 
   /** The table's DEFAULT partition spec as canonical partitionBy
@@ -2253,21 +2253,21 @@ object IcebergTable {
         s"match table schema ${snap.schema.simpleString}")
     val src = graft.Caches.tracked(
       source.select(snap.schema.fieldNames.map(col): _*))
-    // ONE action serves emptiness + the key-ambiguity gate
-    val (nSrc, maxKeyMult) = SourceGate(src, keyCols)
-    if (nSrc == 0L) { src.unpersist(); return snap.snapshotId }
-    require(maxKeyMult <= 1L,
-      "upsert source has duplicate keys — aggregate it first")
-    // field ids of the key columns (equality_ids)
-    val keyIds = {
-      val byName = snap.fieldNames.map(_.swap)
-      keyCols.map(c => byName.getOrElse(c, throw new IllegalStateException(
-        s"no field id for key column $c")))
-    }
-    val v = commitEqualityUpsert(spark, tablePath, snap,
-      src.select(keyCols.map(col): _*), keyIds, src)
-    src.unpersist()
-    v
+    try {
+      // ONE action serves emptiness + the key-ambiguity gate
+      val (nSrc, maxKeyMult, _) = SourceGate(src, keyCols)
+      if (nSrc == 0L) return snap.snapshotId
+      require(maxKeyMult <= 1L,
+        "upsert source has duplicate keys — aggregate it first")
+      // field ids of the key columns (equality_ids)
+      val keyIds = {
+        val byName = snap.fieldNames.map(_.swap)
+        keyCols.map(c => byName.getOrElse(c, throw new IllegalStateException(
+          s"no field id for key column $c")))
+      }
+      commitEqualityUpsert(spark, tablePath, snap,
+        src.select(keyCols.map(col): _*), keyIds, src)
+    } finally src.unpersist()
   }
 
   /** Commit ONE snapshot: equality-delete file (the key tuples) +

@@ -88,6 +88,22 @@ class TextAndDedupSpec extends SparkSpec {
     assert(QualityChecks.invalidFormat(df, "email").count() === 1)
   }
 
+  test("invalidDates flags malformed and out-of-range date strings under ANSI mode") {
+    val prior = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // 1850 is no leap year: 1850-02-29 is malformed, 1850-03-01 is a
+      // valid date before the 1900-01-01 bound
+      val df = Seq((1, "2024-02-29"), (2, "1850-02-29"), (3, "1850-03-01"),
+        (4, "2024-03-01")).toDF("id", "d")
+      assert(QualityChecks.invalidDates(df, Seq("d")).select("id").as[Int]
+        .collect().sorted.toSeq === Seq(2, 3))
+    } finally prior match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("orphans finds fact rows without dims") {
     val fact = Seq((1, 10), (2, 99)).toDF("id", "fk")
     val dim = Seq(10).toDF("pk")
